@@ -21,7 +21,6 @@ object ExplainDump {
     val internal: Map[String, (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame] = Map(
       "_g13g20_wedge" -> ((ss, d) => operators.GraphOps.linkPredictionPairs(edges(d), cutoff)),
-      "_g20_pairs" -> ((ss, d) => operators.GraphOps.linkPredictionPairs(edges(d), cutoff)),
       "_g13_pairs" -> ((ss, d) => operators.GraphOps.nodeSimilarityPairs(edges(d), cutoff)))
     names.foreach { n =>
       println(s"===== $n =====")

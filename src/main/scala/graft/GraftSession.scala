@@ -17,7 +17,19 @@ object GraftSession {
     * callers pass their own master and are unaffected.
     */
   private def defaultMaster: String =
-    s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"
+    s"local[${sys.env.get("SPARK_GRAFT_CPUS").map(parseCpus).getOrElse(defaultCpus)}]"
+
+  /** Local core count when `SPARK_GRAFT_CPUS` is unset; Bench names a
+    * full sweep at this count `bench_<sf>.json`, any other `_c<cpus>`.
+    */
+  val defaultCpus = 32
+
+  /** `SPARK_GRAFT_CPUS` must be a positive integer: anything else would
+    * reach the master string (and Bench's artifact name) verbatim.
+    */
+  private[graft] def parseCpus(raw: String): Int =
+    raw.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_CPUS must be a positive integer, got '$raw'"))
 
   def create(appName: String = "graft", master: String = null): SparkSession = {
     val master0 = Option(master).getOrElse(defaultMaster)

@@ -167,47 +167,6 @@ object GraphIter {
       .select(col("node"), col("label").as("component"))
   }
 
-  /** Power-iteration PageRank over an undirected edge list, fixed iteration
-    * count (deterministic — no convergence-dependent output). Degrees and
-    * the symmetric edge set are computed once and checkpointed; each
-    * iteration is one join + one aggregate, with lineage truncated every
-    * superstep so the 10-step plan never grows.
-    */
-  def pageRank(edges: DataFrame, iterations: Int = 10, damping: Double = 0.85): DataFrame = {
-    val sym = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-    val withDeg = sym
-      .join(sym.groupBy("src").agg(count(lit(1)).as("deg")), Seq("src"))
-      .localCheckpoint(true)
-    var ranks = withDeg.select(col("src").as("node")).distinct()
-      .withColumn("rank", lit(1.0))
-      .localCheckpoint(true)
-    var lastCheckpoint = ranks
-    // Checkpoint every 5th superstep, not every one: between checkpoints
-    // the iterations stay lazy and fuse into a single multi-shuffle job,
-    // while the periodic materialization keeps lineage and plan size
-    // bounded for arbitrary iteration counts. Each eager checkpoint is a
-    // full materialization (~fixed cost regardless of graph size on small
-    // inputs), so the cadence is the knob trading plan depth against
-    // per-superstep overhead.
-    for (it <- 1 to iterations) {
-      var next = withDeg
-        .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node"), (col("rank") / col("deg")).as("contrib"))
-        .groupBy("node")
-        .agg((lit(1.0 - damping) + lit(damping) * sum(col("contrib"))).as("rank"))
-      if (it % 5 == 0 || it == iterations) {
-        next = next.localCheckpoint(true)
-        lastCheckpoint.unpersist()
-        lastCheckpoint = next
-      }
-      ranks = next
-    }
-    withDeg.unpersist()
-    ranks
-  }
-
   /** Fixed-point PageRank: ranks in integer micro-units (1e6 = 1.0),
     * contributions by floor division — every operation is exact integer
     * arithmetic, so the result is independent of aggregation order and

@@ -509,7 +509,7 @@ object GraphOps {
   }
 
   /** The default hub cutoff shared by g13/g20 and their plan-audit
-    * dumps (ExplainDump `_g13_pairs`/`_g20_pairs`) — one constant, so
+    * dumps (ExplainDump `_g13_pairs`/`_g13g20_wedge`) — one constant, so
     * the audit entries cannot silently drift from the production
     * defaults (r16 advice #1).
     */

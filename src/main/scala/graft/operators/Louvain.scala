@@ -41,109 +41,12 @@ import graft.Tables
   * per community pair, so level 2 is strictly cheaper than level 1 —
   * the property that makes multi-level Louvain viable at 100 TB.
   *
-  * SKEW: consolidation is exactly what Louvain converges TOWARD, so by
-  * round 2 a real graph has a giant community whose id is the hot key
-  * of both per-round comdeg joins. A per-round probe over the
-  * O(#communities) relation routes each round ([[joinComdegRouted]]):
-  * plain while no community is hot (zero overhead — the skew-free
-  * case), broadcast the whole dimension when one is and communities
-  * are few, salt the hot communities' probe rows by node hash while
-  * they are not — never a raw shuffle join on a measured mega-key.
+  * SKEW: the giant community Louvain converges toward is left to AQE's
+  * skew-join split and runtime broadcast conversion; a salted comdeg
+  * route measured slower on a synthetic million-member hub (A/B runs in
+  * CHANGES.md).
   */
 object Louvain {
-
-  /** Resolve the skew-defense arming threshold for this session. The
-    * local[32] A/B measured the salted defense as a pure ~1.2× loss up
-    * to 8M-member hot communities (shared-memory hash joins are
-    * bandwidth-cheap), so a LOCAL master defaults to 2²³ — beyond the
-    * measured no-win region. On a real cluster a mega-key is a
-    * straggler × task-count, so a NON-local master keeps the defensive
-    * 100k default instead of inheriting a single-JVM calibration.
-    * Either default yields to the surfaced lever
-    * (`spark.graft.louvain.blockThreshold` session conf, or the
-    * `SPARK_GRAFT_LOUVAIN_BLOCK` env var) — the same per-deployment
-    * sizing discipline as the shuffle-partitions knob. An explicit
-    * `blockThreshold >= 0` argument always wins (the forced-routing
-    * specs pin all three routes with it).
-    */
-  private def resolveBlockThreshold(spark: SparkSession, explicit: Int): Int =
-    if (explicit >= 0) explicit
-    else spark.conf.getOption("spark.graft.louvain.blockThreshold").map(_.toInt)
-      .orElse(sys.env.get("SPARK_GRAFT_LOUVAIN_BLOCK").map(_.toInt))
-      .getOrElse(
-        if (spark.sparkContext.master.startsWith("local")) 1 << 23 else 100000)
-
-  /** Probe-routed join of a per-row relation against the O(#communities)
-    * `comdeg` dimension on community id — the round's skew seam. On any
-    * real graph rounds ≥ 2 grow a giant community, and that community id
-    * becomes the hot key of BOTH per-round comdeg joins (the E-sized
-    * scored relation and the V-sized label update). The route is picked
-    * from the SAME probe aggregate every round (the q16 measure-then-
-    * route discipline; `nComs` = communities, `maxCn` = biggest
-    * community's member count):
-    *
-    *   - `maxCn < blockThreshold`: the PLAIN shuffle join — no hot key
-    *     measured, no defense, zero overhead (the common case on
-    *     balanced rounds; measured at sf10: unconditionally broadcasting
-    *     the ~10⁶-row round-2 comdeg cost ~25% wall on the skew-free
-    *     corpus — the defense must only arm when the probe sees skew);
-    *   - else if `nComs <= broadcastComs`: BROADCAST comdeg — zero
-    *     shuffle on the skewed key, affordable exactly when
-    *     consolidation has shrunk the dimension;
-    *   - else: SALTED shuffle join — the bounded hot set
-    *     (≤ V/blockThreshold communities can exceed the threshold)
-    *     broadcasts as a tag; hot probe rows salt by `pmod(node, s)`
-    *     with `s` DERIVED from the measured max size (the g1/d9
-    *     probe→knob derivation), and the build side replicates ONLY hot
-    *     rows s ways — the mega-community's probe rows spread over s
-    *     reducers instead of one.
-    *
-    * Routing never changes the algebra (same rows, same values), so
-    * labels are hash-identical whichever path fires — spec-pinned with
-    * the thresholds forced both ways on a crafted mega-community graph.
-    *
-    * THRESHOLD CALIBRATION (measured, quiet windows): the armed-path A/B
-    * ([[graft.bench.LouvainSkewAB]] — synthetic giant community forcing
-    * the salted route, labeling checksum-identical both arms) read
-    * salted 46.3 s vs plain 39.5 s at a 1M-member hot community and
-    * 226.6 vs 189.3 s at 8M on local[32]: in a single shared-memory JVM
-    * the hot reducer's hash join is memory-bandwidth-cheap, while the
-    * defense pays a constant ~1.2× (hot-tag broadcast + salt column on
-    * every probe row, ×2 join sites ×rounds). Hence the default
-    * blockThreshold sits at 2²³ — beyond the measured no-win region —
-    * and arming is a CLUSTER decision: on real executors a mega-key is
-    * a straggler ×task-count, and operators lower the lever to their
-    * measured crossover.
-    */
-  private def joinComdegRouted(
-      probe: DataFrame,
-      comdeg: DataFrame,
-      key: String,
-      nodeCol: String,
-      nComs: Long,
-      maxCn: Long,
-      broadcastComs: Long,
-      blockThreshold: Int): DataFrame = {
-    val cd = comdeg.withColumnRenamed("com", key)
-    if (maxCn < blockThreshold) probe.join(cd, Seq(key))
-    else if (nComs <= broadcastComs) probe.join(broadcast(cd), Seq(key))
-    else {
-      val s = GraphOps.derivedBlocks(maxCn, blockThreshold)
-      val hotTag = cd.filter(col("cn") >= lit(blockThreshold.toLong))
-        .select(col(key), lit(true).as("isHot"))
-      val build = cd.join(broadcast(hotTag), Seq(key), "left")
-        .select(col(key), col("cd"), col("cn"),
-          explode(when(col("isHot"),
-            sequence(lit(0), lit(s - 1))).otherwise(array(lit(0)))).as("salt"))
-      probe.join(broadcast(hotTag), Seq(key), "left")
-        .withColumn("salt",
-          when(col("isHot"), pmod(col(nodeCol), lit(s.toLong)).cast("int"))
-            .otherwise(lit(0)))
-        .drop("isHot")
-        .join(build, Seq(key, "salt"))
-        .drop("salt")
-    }
-  }
 
   /** `rounds` synchronous parity-gated local-move rounds over a
     * SYMMETRIC weighted edge list `(src, dst, w)` (both directions
@@ -151,17 +54,13 @@ object Louvain {
     * direction-doubled), starting from `labels0 (node, com)`.
     * `twoM` = total symmetric weight Σ w (= 2m). `parity0` offsets the
     * gate so a second level can continue the alternation.
-    * `broadcastComs`/`blockThreshold` are the skew-route thresholds
-    * ([[joinComdegRouted]]).
     */
   private def localMoveRounds(
       sym: DataFrame,
       labels0: DataFrame,
       rounds: Int,
       twoM: Long,
-      parity0: Int = 1,
-      broadcastComs: Long = 1L << 20,
-      blockThreshold: Int = 1 << 23): DataFrame = {
+      parity0: Int = 1): DataFrame = {
     // Weighted degree INCLUDING self-loops (a contracted community's
     // internal mass travels with it; it cancels in score differences but
     // must be consistent on both sides of every comparison).
@@ -179,17 +78,9 @@ object Louvain {
     var labels = labels0.join(k, Seq("node")).localCheckpoint(true)
     (0 until rounds).foreach { i =>
       val parity = (parity0 + i) % 2
-      // Community degree mass AND member count in one pass: `cd` feeds
-      // the scores, `cn` feeds the skew probe below (free — same
-      // aggregate).
-      val comdeg = labels.groupBy("com")
-        .agg(sum("k").as("cd"), count(lit(1)).as("cn"))
+      // Community degree mass, pinned once for both join sites below.
+      val comdeg = labels.groupBy("com").agg(sum("k").as("cd"))
         .localCheckpoint(true)
-      // The per-round skew probe: one tiny aggregate over the
-      // checkpointed O(#communities) relation decides the comdeg join
-      // route for BOTH join sites this round (q16's measure-then-route).
-      val probe = comdeg.agg(count(lit(1)), max("cn")).head()
-      val (nComs, maxCn) = (probe.getLong(0), probe.getLong(1))
       // k_{i,c}: weight from i to community c over its NEIGHBORS (self
       // loops excluded — a node's own mass is not a vote for a
       // community; it stays internal wherever the node goes). This is
@@ -205,9 +96,8 @@ object Louvain {
       // c == com this expression IS the staying score, so one aggregate
       // extracts both the argmax (score desc, min community — the
       // negation trick) and the stay score, in a single kic pass.
-      val scored = joinComdegRouted(
-        kic.join(labels, Seq("node")), comdeg, "c", "node",
-        nComs, maxCn, broadcastComs, blockThreshold)
+      val scored = kic.join(labels, Seq("node"))
+        .join(comdeg.withColumnRenamed("com", "c"), Seq("c"))
         .select(col("node"), col("c"), col("com"),
           (lit(twoM) * col("kic") -
             col("k") * (col("cd") -
@@ -219,9 +109,7 @@ object Louvain {
           max(when(col("c") === col("com"), col("score"))).as("kicStay"))
       // Staying score when NO neighbor is left in the current community:
       // k_{i,cur} = 0 — a V-sized expression over labels⋈comdeg, no edge data.
-      val next = joinComdegRouted(
-        labels, comdeg, "com", "node",
-        nComs, maxCn, broadcastComs, blockThreshold)
+      val next = labels.join(comdeg, Seq("com"))
         .join(agg, Seq("node"), "left")
         .select(col("node"),
           when(pmod(col("node"), lit(2)) === lit(parity) &&
@@ -257,16 +145,12 @@ object Louvain {
   private def louvainLevels(
       sym: DataFrame,
       level1Rounds: Int,
-      level2Rounds: Int,
-      broadcastComs: Long,
-      blockThreshold0: Int): LouvainLevels = {
-    val blockThreshold = resolveBlockThreshold(sym.sparkSession, blockThreshold0)
+      level2Rounds: Int): LouvainLevels = {
     val e1 = sym.localCheckpoint(true)
     val twoM = e1.agg(coalesce(sum("w"), lit(0L))).head().getLong(0)
     val init = e1.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("com"))
-    val l1 = localMoveRounds(e1, init, level1Rounds, twoM, parity0 = 1,
-      broadcastComs = broadcastComs, blockThreshold = blockThreshold)
+    val l1 = localMoveRounds(e1, init, level1Rounds, twoM, parity0 = 1)
     // EXPLICIT CONTRACTION: communities become super-nodes; inter-
     // community weights sum (symmetry is preserved — both directions of
     // an edge map consistently); intra-community mass lands on the
@@ -280,8 +164,7 @@ object Louvain {
     val init2 = e2.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("com"))
     val l2 = localMoveRounds(
-      e2, init2, level2Rounds, twoM, parity0 = (1 + level1Rounds) % 2,
-      broadcastComs = broadcastComs, blockThreshold = blockThreshold)
+      e2, init2, level2Rounds, twoM, parity0 = (1 + level1Rounds) % 2)
     // Fold levels: node → level-1 community → level-2 community. Every
     // level-1 community appears as an e2 src (its members have edges, a
     // self-loop at minimum), so l2 covers it; the coalesce is belt.
@@ -296,16 +179,12 @@ object Louvain {
     * (no self-loops expected at level 1). Returns `(node, community)`
     * with the community CANONICALIZED to its minimum member node id —
     * stable across engines and levels, like CC labels.
-    * `blockThreshold = -1` (the default) resolves per session
-    * ([[resolveBlockThreshold]]); an explicit value pins the route.
     */
   def louvain(
       sym: DataFrame,
       level1Rounds: Int = 4,
-      level2Rounds: Int = 2,
-      broadcastComs: Long = 1L << 20,
-      blockThreshold: Int = -1): DataFrame = {
-    val lv = louvainLevels(sym, level1Rounds, level2Rounds, broadcastComs, blockThreshold)
+      level2Rounds: Int = 2): DataFrame = {
+    val lv = louvainLevels(sym, level1Rounds, level2Rounds)
     lv.e2.unpersist()
     canonicalize(lv.folded)
   }
@@ -372,10 +251,8 @@ object Louvain {
   def louvainStats(
       sym: DataFrame,
       level1Rounds: Int = 4,
-      level2Rounds: Int = 2,
-      broadcastComs: Long = 1L << 20,
-      blockThreshold: Int = -1): DataFrame = {
-    val lv = louvainLevels(sym, level1Rounds, level2Rounds, broadcastComs, blockThreshold)
+      level2Rounds: Int = 2): DataFrame = {
+    val lv = louvainLevels(sym, level1Rounds, level2Rounds)
     val canon = lv.folded.groupBy("com").agg(min("node").as("community"))
     val out = communityStatsFolded(lv)
       .join(canon, Seq("com"))

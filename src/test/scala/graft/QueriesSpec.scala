@@ -1334,37 +1334,26 @@ class QueriesSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("g23 louvain skew routing: broadcast / salted / plain comdeg routes are label-identical") {
+  test("g23 louvain skew shape: a star becomes one mega community beside a triangle") {
     val ss = spark
     import ss.implicits._
     // The skew shape Louvain converges TOWARD: a star (hub 1, 60
     // spokes) consolidates into one mega community within two rounds,
     // making the hub community's id the hot key of the per-round comdeg
-    // joins; the triangle keeps a second community alive so routing has
-    // cold keys too.
+    // joins; the triangle keeps a second community alive so the joins
+    // have cold keys too.
     val e0 = (2L to 61L).map(s => (1L, s, 1L)) ++
       Seq((200L, 201L, 1L), (201L, 202L, 1L), (200L, 202L, 1L))
     val sym = (e0 ++ e0.map { case (a, b, w) => (b, a, w) })
       .toDF("src", "dst", "w")
-    def run(bc: Long, bt: Int): Map[Long, Long] =
-      operators.Louvain.louvain(sym, broadcastComs = bc, blockThreshold = bt)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // Force each route: PLAIN (threshold never reached — the defense
-    // stays dark), SALTED (every community of >= 2 members is "hot" and
-    // broadcast is disabled — fires from round 2 on), and BROADCAST
-    // (hot + no community-count cap). Identical labels prove routing
-    // never changes the algebra.
-    val plain = run(0L, Int.MaxValue)
-    val salted = run(0L, 2)
-    val bcast = run(Long.MaxValue, 2)
-    assert(salted === plain, "salted route must be label-identical to plain")
-    assert(bcast === plain, "broadcast route must be label-identical to plain")
-    // The mega community really formed (the salted run really had a hot
-    // key): the hub's community holds the majority of the star.
-    assert(plain.values.groupBy(identity).values.map(_.size).max >= 31,
-      s"star must consolidate into a mega community: $plain")
-    assert(plain(200L) === plain(201L) && plain(201L) === plain(202L) &&
-      plain(200L) != plain(1L), "triangle stays its own community")
+    val labels = operators.Louvain.louvain(sym)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // The mega community really formed: the hub's community holds the
+    // majority of the star.
+    assert(labels.values.groupBy(identity).values.map(_.size).max >= 31,
+      s"star must consolidate into a mega community: $labels")
+    assert(labels(200L) === labels(201L) && labels(201L) === labels(202L) &&
+      labels(200L) != labels(1L), "triangle stays its own community")
   }
 
   test("minRelaxTraverse: per-hop edge predicates express a Cypher MATCH no fixed shape covers") {
